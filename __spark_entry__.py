@@ -349,7 +349,7 @@ rules:
         canonicalization (stage 3; DuckDB mirrors it with a recursive CTE).
         Output: (surface, canonical) where canonical = min surface of the
         equivalence class."""
-        from odinson_spark.pipeline.components import connected_components
+        from odinson_spark.pipeline.components import connected_components_star
 
         extractors, _ = RuleReader().compile_rules(EVENT_GRAMMAR)
         mentions = extract_one_shot(_t(s, d, "documents"), extractors)
@@ -403,7 +403,7 @@ rules:
             )
         )
         kept = scored.filter(F.col("_jacc_e6") >= 500000).select("doc_a", "doc_b")
-        cc = connected_components(
+        cc = connected_components_star(
             surfaces, kept, id_col="surface", src_col="doc_a", dst_col="doc_b"
         )
         return cc.select(
@@ -805,35 +805,7 @@ rules:
         s, d, "agg >next []", max_candidate_frac=1.0
     )
 
-    # The driver's CORRECTNESS artifact records only the FIRST 50 entries
-    # (insertion-ordered). Keep the load-bearing gates — the idx_* index
-    # path, streaming parity, windowed events, multimodal, tpch — inside
-    # that window by demoting micro-gates whose operator semantics are
-    # already exercised by recorded composites (negation/conjunction inside
-    # cascade_state and custom_field; lazy/optional quantifiers share
-    # pat_term's span set; anchors/lookbehind/graph_in/graph_hop2 mirror
-    # recorded twins). Every entry below still runs and is oracle-checked —
-    # order changes nothing but artifact visibility.
-    demoted = [
-        "pat_neg",
-        "pat_or",
-        "pat_conj",
-        "pat_quant_lazy",
-        "pat_anchor_start",
-        "pat_anchor_end",
-        "pat_lookbehind",
-        "pat_opt",
-        "pat_opt_lazy",
-        "graph_in",
-        "graph_hop2",
-        # single-capture selection is inside recorded composites too
-        # (event_arg_filter explodes captures; pat_expand widens them)
-        "pat_capture",
-    ]
-    ordered = {k: v for k, v in q.items() if k not in demoted}
-    for k in demoted:
-        ordered[k] = q[k]
-    return ordered
+    return q
 
 
 def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:

@@ -1,9 +1,9 @@
 """Single-process matcher floor profiler (no Spark).
 
-Replicates the body of the fused one-shot stage
-(odinson_spark/pipeline/oneshot.py:fn) over the sf documents table on ONE
-core, under cProfile, and prints the top cumulative-time functions per
-stage.  This is the per-core ceiling that bounds cluster throughput: at
+Runs the body of the fused one-shot stage (odinson_spark/pipeline/oneshot.py:
+the sentence encoder, then the shared extraction core) over the sf documents
+table on ONE core, under cProfile, and prints the top cumulative-time
+functions.  This is the per-core ceiling that bounds cluster throughput: at
 1000 executors the wall clock is (docs / (cores × docs_per_sec_here)) —
 optimizing here moves every deployment.
 
@@ -30,40 +30,11 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from odinson_spark.lang.rules import RuleReader
-    from odinson_spark.match.extractor import BatchExtractor
-    from odinson_spark.pipeline.extract import _fields_used, _mention_frame
-    from odinson_spark.match.matches import EventMatch
-    from odinson_spark.testing import sentence_batch_from_docs
-    from odinson_spark.tokenizer.code_tokenizer import annotate_text, content_sha
+    from odinson_spark.pipeline.extract import _annotate_frame, mention_extractor
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    docs = list(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
+    docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]).to_pandas()
     extractors, _ = RuleReader().compile_rules(entrymod.EVENT_GRAMMAR)
-    need_inout = bool(
-        _fields_used([e.program for e in extractors]) & {"incoming", "outgoing"}
-    )
-    runner = BatchExtractor(extractors)
-
-    def annotate_stage():
-        sents, doc_ids, sent_ids, shas = [], [], [], []
-        for doc_id, text in docs:
-            sha = content_sha(text or "")
-            for s in annotate_text(text or "", 100):
-                sents.append(s)
-                doc_ids.append(str(doc_id))
-                sent_ids.append(s["sent_id"])
-                shas.append(sha)
-        return sents, doc_ids, sent_ids, shas
-
-    def batch_stage(sents):
-        return sentence_batch_from_docs(
-            sents, build_inout=need_inout, pre_normalized=True
-        )
-
-    def match_stage(batch, doc_ids, sent_ids, shas):
-        mentions = runner.extract_no_state(batch, doc_ids, sent_ids)
-        idx = {(doc_ids[i], sent_ids[i]): i for i in range(len(doc_ids))}
-        return _mention_frame(mentions, idx, batch.raw_layers["raw"], shas, EventMatch)
+    run = mention_extractor(extractors)
 
     profiling = os.environ.get("PROFILE", "1") != "0"
     repeats = 1 if profiling else int(os.environ.get("REPEATS", "3"))
@@ -74,7 +45,7 @@ def main() -> None:
         t0 = time.time()
         if profiling:
             prof.enable()
-        sents, doc_ids, sent_ids, shas = annotate_stage()
+        sents = _annotate_frame(docs, False, 100)
         if profiling:
             prof.disable()
         stages["annotate"] = time.time() - t0
@@ -82,18 +53,10 @@ def main() -> None:
         t0 = time.time()
         if profiling:
             prof.enable()
-        batch = batch_stage(sents)
+        frame = run(sents)
         if profiling:
             prof.disable()
-        stages["batch_build"] = time.time() - t0
-
-        t0 = time.time()
-        if profiling:
-            prof.enable()
-        frame = match_stage(batch, doc_ids, sent_ids, shas)
-        if profiling:
-            prof.disable()
-        stages["match"] = time.time() - t0
+        stages["extract"] = time.time() - t0
         if best is None or sum(stages.values()) < sum(best.values()):
             best = stages
 

@@ -209,86 +209,6 @@ def _postings_of(with_bucket: DataFrame, cols: Sequence[str], n_term_buckets: in
     )
 
 
-def _postings_of_sql(src: DataFrame, cols: Sequence[str], n_term_buckets: int) -> DataFrame:
-    """Pure-JVM postings builder — identical rows to :func:`_postings_of`
-    (asserted in tests/test_index.py), no Python boundary.
-
-    One fused pass: every layer's tokens become (field, term, pos) structs
-    via ``transform`` (pos = array index for positional layers, null for
-    flat label sets), one ``explode`` flattens them, and a single
-    ``groupBy`` assembles ascending position lists with
-    ``sort_array(collect_list(pos))`` — aggregation, not an interpreted
-    per-row loop, so the build-side hot path stays in the JVM. A/B'd
-    against the mapInPandas route (BENCH.md 'postings builder A/B'); the
-    Python route is kept for the equality test."""
-    flat = {c for c in cols if c.endswith("_flat")}
-
-    # factories, not default-arg lambdas: pyspark counts a lambda's
-    # parameters (defaults included) to pick the unary/binary HOF form
-    # nullif with an impossible sentinel: same constant, but typed nullable
-    # (Spark 4's analyzer folds an else-less when(true, lit) back to a
-    # non-nullable literal) — keeps the output schema json byte-identical
-    # to the mapInPandas route's (meta pins it)
-    def _field_lit(name):
-        return F.nullif(F.lit(name), F.lit("\x00"))
-
-    def _flat_struct(name):
-        return lambda x: F.struct(
-            _field_lit(name).alias("field"),
-            x.alias("term"),
-            F.lit(None).cast("int").alias("pos"),
-        )
-
-    def _pos_struct(name):
-        return lambda x, i: F.struct(
-            _field_lit(name).alias("field"),
-            x.alias("term"),
-            i.cast("int").alias("pos"),
-        )
-
-    parts = []
-    for c in cols:
-        col = F.coalesce(F.col(c), F.array().cast(src.schema[c].dataType))
-        parts.append(F.transform(col, _flat_struct(c) if c in flat else _pos_struct(c)))
-    ex = src.select(
-        "doc_bucket", "doc_id", "sent_id", F.explode(F.concat(*parts)).alias("e")
-    ).filter(F.col("e.term").isNotNull())
-    grouped = (
-        ex.groupBy(
-            F.col("e.field").alias("field"),
-            F.col("e.term").alias("term"),
-            "doc_bucket",
-            "doc_id",
-            "sent_id",
-        )
-        .agg(
-            F.when(F.count("e.pos") > 0, F.sort_array(F.collect_list("e.pos")))
-            .otherwise(F.lit(None).cast("array<int>"))
-            .alias("positions")
-        )
-    )
-    # .to(): align nullability with the mapInPandas route's declared schema —
-    # meta pins postings.schema at build time, so the two routes must write
-    # byte-identical schema json
-    from pyspark.sql import types as T
-
-    target = T.StructType(
-        [
-            T.StructField("field", T.StringType()),
-            T.StructField("term", T.StringType()),
-            src.schema["doc_bucket"],
-            src.schema["doc_id"],
-            src.schema["sent_id"],
-            T.StructField("positions", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    return (
-        grouped.select("field", "term", "doc_bucket", "doc_id", "sent_id", "positions")
-        .to(target)
-        .withColumn("tbucket", _bucket(F.col("term"), n_term_buckets))
-    )
-
-
 class TermIndex:
     """A written (sentences, postings) pair plus its meta."""
 
@@ -379,13 +299,9 @@ class TermIndex:
         # postings from the files just written, not the upstream plan: the
         # (possibly expensive) annotation pipeline ran once for the sentence
         # write; the postings pass re-reads columnar parquet instead of
-        # re-executing it. The builder itself stays the Arrow-batched
-        # mapInPandas route: the pure-JVM explode+groupBy alternative
-        # (_postings_of_sql) was A/B'd at 50k docs and LOST 4-6× — 27M
-        # per-token structs through interpreted transform + an
-        # ObjectHashAggregate collect_list cost far more than a per-sentence
-        # dict loop that emits already-grouped rows (BENCH.md 'postings
-        # builder A/B').
+        # re-executing it. A pure-JVM explode+groupBy route lost to this
+        # mapInPandas route 4-6× (per-token structs through an
+        # ObjectHashAggregate collect_list; see the postings A/B in BENCH.md).
         written_sentences = spark.read.schema(with_bucket.schema).parquet(
             os.path.join(path, "sentences")
         )

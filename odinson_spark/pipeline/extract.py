@@ -21,20 +21,20 @@ write). Skew from giant files is handled upstream by salted repartitioning
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Iterable, Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..lang import ast
 from ..lang.rules import Extractor
 from ..match import program as prog
 from ..match.context import SentenceBatch
 from ..match.extractor import BatchExtractor
+from ..match.matches import EventMatch
 from ..plans.prefilter import pf_or, prefilter_of, to_spark_column
-from ..schema import MENTIONS_SCHEMA, SENTENCES_SCHEMA, TRIPLES_SCHEMA
+from ..schema import MENTIONS_SCHEMA, SENTENCES_SCHEMA, sentences_schema
 from ..tokenizer.code_tokenizer import annotate_code, annotate_text, content_sha
 
 # ---------------------------------------------------------------------------
@@ -42,52 +42,15 @@ from ..tokenizer.code_tokenizer import annotate_code, annotate_text, content_sha
 # ---------------------------------------------------------------------------
 
 
-def _sentences_rows(doc_id, sha, lang, sentences, extra_token_fields=()) -> Iterator[dict]:
-    for s in sentences:
-        edges = s.get("edges") or []
-        labels = [lab for _, _, lab in edges]
-        incoming = sorted({lab for _, _, lab in edges})
-        extras = {name: s.get(name) for name in extra_token_fields}
-        yield {
-            **extras,
-            "doc_id": doc_id,
-            "sent_id": s["sent_id"],
-            "content_sha": sha,
-            "lang": lang,
-            "num_tokens": len(s["raw"]),
-            "raw": s["raw"],
-            "word": s["word"],
-            "norm": s["norm"],
-            "norm_alt": s.get("norm_alt"),
-            "lemma": s["lemma"],
-            "tag": s["tag"],
-            "chunk": s["chunk"],
-            "entity": s["entity"],
-            "deps_src": [e[0] for e in edges],
-            "deps_dst": [e[1] for e in edges],
-            "deps_label": labels,
-            "deps_roots": s.get("roots") or [],
-            "incoming_flat": incoming,
-            "outgoing_flat": incoming,
-        }
-
-
-def _fan_out(df: DataFrame, force: Optional[bool] = None) -> DataFrame:
+def _fan_out(df: DataFrame) -> DataFrame:
     """Small inputs often arrive as one parquet split; the Python annotate/
     match stages scale with partition count, so widen to the session's
-    parallelism. On a real corpus (thousands of splits) this is a no-op.
-
-    ``force``: explicit override — True always repartitions, False never
-    (skips the partition-count probe entirely)."""
+    parallelism. On a real corpus (thousands of splits) this is a no-op."""
     if df.isStreaming:
         return df  # micro-batch sizing is the trigger's job
-    if force is False:
-        return df
     # one wave of core-count tasks measured fastest on local[*]; finer tasks
     # add per-task Arrow/scheduling overhead without helping balance here
     target = df.sparkSession.sparkContext.defaultParallelism
-    if force is True:
-        return df.repartition(target)
     try:
         # physical partition count straight off the query execution — avoids
         # building the Python RDD wrapper (and its deserializer) per call
@@ -99,21 +62,29 @@ def _fan_out(df: DataFrame, force: Optional[bool] = None) -> DataFrame:
     return df
 
 
-_SENTENCE_COLS = [f.name for f in SENTENCES_SCHEMA.fields]
-
-
-def _sentences_frame(annotated: Iterable[Tuple[str, str, Optional[str], list]]) -> pd.DataFrame:
+def _sentences_frame(
+    annotated: Iterable[Tuple[str, str, Optional[str], list]],
+    extra_token_fields: Sequence[str] = (),
+) -> pd.DataFrame:
     """(doc_id, sha, lang, sentences) stream → one Arrow-ready frame, built
     column-wise (dict-of-lists): no per-sentence dict, one DataFrame
     construction per batch — the batch_from_pandas treatment applied to the
-    tokenize stage."""
+    tokenize stage. The only sentence encoder: annotators, the JSON sources
+    and the fused stage all emit sentence rows through it.
+
+    ``extra_token_fields``: user-configured token layers, one column each
+    (``sentences_schema(extra_token_fields)`` order)."""
+    extras = [f for f in extra_token_fields if f not in SENTENCES_SCHEMA.names]
     c_doc, c_sent, c_sha, c_lang, c_nt = [], [], [], [], []
     c_raw, c_word, c_norm, c_nalt, c_lem, c_tag, c_chk, c_ent = (
         [], [], [], [], [], [], [], [],
     )
     c_src, c_dst, c_lab, c_roots, c_inc, c_out = [], [], [], [], [], []
+    c_extra = {name: [] for name in extras}
     for doc_id, sha, lang, sentences in annotated:
         for s in sentences:
+            for name, col in c_extra.items():
+                col.append(s.get(name))
             edges = s.get("edges") or []
             if isinstance(edges, tuple) and len(edges) == 3:
                 # vectorized (src, dst, label) triple from the annotator
@@ -146,11 +117,13 @@ def _sentences_frame(annotated: Iterable[Tuple[str, str, Optional[str], list]]) 
             c_roots.append(s.get("roots") or [])
             c_inc.append(incoming)
             c_out.append(incoming)
+    cols = [f.name for f in sentences_schema(extras).fields]
     if not c_doc:
         # empty dict-of-lists would infer float64 columns Arrow can't cast
-        return pd.DataFrame(columns=_SENTENCE_COLS)
+        return pd.DataFrame(columns=cols)
     return pd.DataFrame(
         {
+            **c_extra,
             "doc_id": c_doc,
             "sent_id": c_sent,
             "content_sha": c_sha,
@@ -171,50 +144,48 @@ def _sentences_frame(annotated: Iterable[Tuple[str, str, Optional[str], list]]) 
             "incoming_flat": c_inc,
             "outgoing_flat": c_out,
         },
-        columns=_SENTENCE_COLS,
+        columns=cols,
     )
+
+
+def _annotate_frame(pdf: pd.DataFrame, code: bool, max_tokens: int) -> pd.DataFrame:
+    """One input batch → sentence frame. ``code`` annotates with
+    ``annotate_code`` (``annotate_text`` otherwise); a ``content`` column
+    marks a repos(repo, path, commit, content) batch, else the batch is
+    documents(doc_id, text). ``lang`` is carried when present."""
+    annotate = annotate_code if code else annotate_text
+    if code and "content" in pdf.columns:
+        doc_ids = (
+            f"{repo}/{path}@{commit}"
+            for repo, path, commit in zip(pdf["repo"], pdf["path"], pdf["commit"])
+        )
+        texts = pdf["content"]
+    else:
+        doc_ids = (str(d) for d in pdf["doc_id"])
+        texts = pdf["text"]
+    langs = pdf["lang"] if "lang" in pdf.columns else [None] * len(pdf)
+    return _sentences_frame(
+        (doc_id, content_sha(text or ""), lang, annotate(text or "", max_tokens))
+        for doc_id, text, lang in zip(doc_ids, texts, langs)
+    )
+
+
+def _tokenize(df: DataFrame, code: bool, max_tokens: int) -> DataFrame:
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _annotate_frame(pdf, code, max_tokens)
+
+    return _fan_out(df).mapInPandas(fn, SENTENCES_SCHEMA)
 
 
 def tokenize_repos(repos: DataFrame, max_tokens: int = 100) -> DataFrame:
     """repos(repo, path, commit, lang, content) → sentence rows."""
-    repos = _fan_out(repos)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _sentences_frame(
-                (
-                    f"{repo}/{path}@{commit}",
-                    content_sha(content or ""),
-                    lang,
-                    annotate_code(content or "", max_tokens),
-                )
-                for repo, path, commit, lang, content in zip(
-                    pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-                )
-            )
-
-    return repos.mapInPandas(fn, SENTENCES_SCHEMA)
+    return _tokenize(repos, True, max_tokens)
 
 
 def tokenize_documents(documents: DataFrame, max_tokens: int = 100) -> DataFrame:
     """documents(doc_id, text, lang, …) → sentence rows (whitespace mode)."""
-    documents = _fan_out(documents)
-    has_lang = "lang" in documents.columns
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            langs = pdf["lang"] if has_lang else [None] * len(pdf)
-            yield _sentences_frame(
-                (
-                    str(doc_id),
-                    content_sha(text or ""),
-                    lang,
-                    annotate_text(text or "", max_tokens),
-                )
-                for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"], langs)
-            )
-
-    return documents.mapInPandas(fn, SENTENCES_SCHEMA)
+    return _tokenize(documents, False, max_tokens)
 
 
 # ---------------------------------------------------------------------------
@@ -366,9 +337,7 @@ def batch_from_pandas(
 _MENTION_COLS = [f.name for f in MENTIONS_SCHEMA.fields]
 
 
-def _mention_frame(
-    mentions, idx_by_key, raws, shas, EventMatch, cols=None
-) -> pd.DataFrame:
+def _mention_frame(mentions, idx_by_key, raws, shas, cols=None) -> pd.DataFrame:
     """Mentions → pandas frame, built column-wise (dict-of-lists): one
     DataFrame construction per batch instead of one dict per mention row.
 
@@ -453,66 +422,79 @@ def required_columns(
     return cols
 
 
+def mention_extractor(
+    extractors: Sequence[Extractor],
+    use_state: bool = False,
+    allow_trigger_overlaps: bool = False,
+    disable_match_selector: bool = False,
+    extra_token_fields: Sequence[str] = (),
+    cols: Optional[Sequence[str]] = None,
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The extraction core: a function from a non-empty sentence frame to its
+    mention frame — ``batch_from_pandas`` → ``BatchExtractor`` → (doc, sent)
+    key index → ``_mention_frame``. The staged, fused and streaming stages
+    and the profiler all run it; build it once per task.
+
+    ``use_state=False`` runs the single-pass no-state path; ``use_state=True``
+    runs the full priority cascade *within each batch* (sentence-local state
+    is exact because reference state lookups are keyed by (doc, sentence) —
+    StateQuery.scala:14-142 reads mentions of the same sentence only).
+    ``cols`` — optional subset of mention columns to build (see
+    :func:`_mention_frame`)."""
+    programs = [e.program for e in extractors]
+    need_graph = _uses_graph(programs)
+    need_inout = bool(_fields_used(programs) & {"incoming", "outgoing"})
+    runner = BatchExtractor(extractors)
+    extract = runner.extract_mentions if use_state else runner.extract_no_state
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        batch, doc_ids, sent_ids = batch_from_pandas(
+            pdf, need_graph, need_inout, extra_token_fields
+        )
+        mentions = extract(
+            batch, doc_ids, sent_ids, allow_trigger_overlaps, disable_match_selector
+        )
+        raws = batch.raw_layers.get("raw")
+        if raws is None:
+            raws = batch.raw_layers.get("word")
+        shas = list(pdf["content_sha"]) if "content_sha" in pdf.columns else [None] * len(pdf)
+        idx_by_key = {key: i for i, key in enumerate(zip(doc_ids, sent_ids))}
+        return _mention_frame(mentions, idx_by_key, raws, shas, cols)
+
+    return run
+
+
 def extract_mentions_df(
     sentences: DataFrame,
     extractors: Sequence[Extractor],
     use_state: bool = False,
     allow_trigger_overlaps: bool = False,
     disable_match_selector: bool = False,
-    prune_columns: bool = True,
     extra_token_fields: Sequence[str] = (),
 ) -> DataFrame:
-    """Run the grammar; one matcher pass per Arrow batch, no shuffle.
+    """Run the grammar; one matcher pass per Arrow batch, no shuffle. Only
+    the sentence columns the rules read cross into Python.
 
-    ``use_state=False`` runs the single-pass no-state path; ``use_state=True``
-    runs the full priority cascade *within each batch* (sentence-local state
-    is exact because reference state lookups are keyed by (doc, sentence) —
-    StateQuery.scala:14-142 reads mentions of the same sentence only).
-
+    ``use_state`` as in :func:`mention_extractor`.
     ``extra_token_fields``: user-configured token layers beyond the built-in
     set (reference ``allTokenFields``, reference.conf:46-57) — each must be a
     position-aligned array<string> column on ``sentences``."""
-    programs = [e.program for e in extractors]
-    need_graph = _uses_graph(programs)
-    need_inout = bool(_fields_used(programs) & {"incoming", "outgoing"})
     extra_token_fields = tuple(extra_token_fields)
-    if prune_columns:
-        cols = [
-            c
-            for c in required_columns(extractors, extra_token_fields)
-            if c in sentences.columns
-        ]
-        sentences = sentences.select(*cols)
-    spark = sentences.sparkSession
-    bc = spark.sparkContext.broadcast(list(extractors))
+    cols = [
+        c
+        for c in required_columns(extractors, extra_token_fields)
+        if c in sentences.columns
+    ]
+    bc = sentences.sparkSession.sparkContext.broadcast(list(extractors))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extrs = bc.value
-        runner = BatchExtractor(extrs)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            batch, doc_ids, sent_ids = batch_from_pandas(
-                pdf, need_graph, need_inout, extra_token_fields
-            )
-            raws = batch.raw_layers.get("raw")
-            if raws is None:
-                raws = batch.raw_layers.get("word")
-            if use_state:
-                mentions = runner.extract_mentions(
-                    batch, doc_ids, sent_ids, allow_trigger_overlaps, disable_match_selector
-                )
-            else:
-                mentions = runner.extract_no_state(
-                    batch, doc_ids, sent_ids, allow_trigger_overlaps, disable_match_selector
-                )
-            shas = list(pdf["content_sha"]) if "content_sha" in pdf.columns else [None] * len(pdf)
-            idx_by_key = {(doc_ids[i], sent_ids[i]): i for i in range(len(doc_ids))}
-            from ..match.matches import EventMatch
+        run = mention_extractor(
+            bc.value, use_state, allow_trigger_overlaps, disable_match_selector,
+            extra_token_fields,
+        )
+        return (run(pdf) for pdf in batches if len(pdf))
 
-            yield _mention_frame(mentions, idx_by_key, raws, shas, EventMatch)
-
-    return sentences.mapInPandas(fn, MENTIONS_SCHEMA)
+    return sentences.select(*cols).mapInPandas(fn, MENTIONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,11 @@ The staged path (tokenize → sentence table → match) is right when the
 annotated corpus is materialized once and queried many times (the
 index-then-search shape of the reference). For one-shot jobs it pays the
 Arrow round-trip of fat sentence rows (all token layers) twice. This fused
-stage annotates AND matches inside one ``mapInPandas`` pass, so only raw
-text enters Python and only (small) mention rows leave.
+stage runs the staged path's two Python halves back to back inside one
+``mapInPandas`` worker: the sentence encoder (``_annotate_frame`` →
+``_sentences_frame``) and the shared extraction core
+(``mention_extractor``), so only raw text enters Python, only (small)
+mention rows leave, and the sentence frame never crosses Arrow.
 
 The rule prefilter is applied at the *text* level before the UDF:
 a required term over a text-derived layer implies a substring hit, which
@@ -14,7 +17,7 @@ Catalyst pushes into the parquet/Iceberg scan.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+from typing import Iterator, Optional, Sequence
 
 import pandas as pd
 
@@ -22,12 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lang.rules import Extractor
-from ..match.extractor import BatchExtractor
 from ..plans import prefilter as pfmod
 from ..schema import MENTIONS_SCHEMA
-from ..testing import sentence_batch_from_docs
-from ..tokenizer.code_tokenizer import annotate_code, annotate_text, content_sha
-from .extract import _fan_out, _fields_used, _mention_frame
+from .extract import _annotate_frame, _fan_out, mention_extractor
 
 # layers derivable from the raw text by the deterministic annotators — a term
 # constraint on these implies a substring occurrence in `text`
@@ -104,61 +104,20 @@ def extract_one_shot(
     unread content_sha strings alone are ~100 MB of boundary traffic
     (optimization guide §4.1: pass only the columns the function needs, in
     both directions). None = the full MENTIONS_SCHEMA."""
-    annotate = annotate_text if mode == "text" else annotate_code
-    is_repos = mode == "code" and "content" in documents.columns
+    code = mode != "text"
+    is_repos = code and "content" in documents.columns
 
     if apply_text_prefilter and not is_repos:
         pf = pfmod.pf_or([pfmod.prefilter_of(e.program) for e in extractors])
         documents = documents.filter(text_prefilter_column(pf))
 
     documents = _fan_out(documents)
-    spark = documents.sparkSession
-    bc = spark.sparkContext.broadcast(list(extractors))
-    need_inout = bool(
-        _fields_used([e.program for e in extractors]) & {"incoming", "outgoing"}
-    )
+    bc = documents.sparkSession.sparkContext.broadcast(list(extractors))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..match.matches import EventMatch
-
-        runner = BatchExtractor(bc.value)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sents: List[dict] = []
-            doc_ids: List[str] = []
-            sent_ids: List[int] = []
-            shas: List[str] = []
-            if is_repos:
-                it = (
-                    (f"{r.repo}/{r.path}@{r.commit}", r.content or "")
-                    for r in pdf.itertuples(index=False)
-                )
-            else:
-                it = ((str(d), t or "") for d, t in zip(pdf["doc_id"], pdf["text"]))
-            for doc_id, text in it:
-                sha = content_sha(text)
-                for s in annotate(text, max_tokens):
-                    sents.append(s)
-                    doc_ids.append(doc_id)
-                    sent_ids.append(s["sent_id"])
-                    shas.append(sha)
-            if not sents:
-                continue
-            # annotators emit sanitized+NFKC tokens with a precomputed norm
-            # layer; skip the redundant per-token re-normalization
-            batch = sentence_batch_from_docs(
-                sents, build_inout=need_inout, pre_normalized=True
-            )
-            if use_state:
-                mentions = runner.extract_mentions(batch, doc_ids, sent_ids)
-            else:
-                mentions = runner.extract_no_state(batch, doc_ids, sent_ids)
-            idx = {(doc_ids[i], sent_ids[i]): i for i in range(len(doc_ids))}
-            yield _mention_frame(
-                mentions, idx, batch.raw_layers["raw"], shas, EventMatch,
-                cols=project,
-            )
+        run = mention_extractor(bc.value, use_state, cols=project)
+        frames = (_annotate_frame(pdf, code, max_tokens) for pdf in batches)
+        return (run(sents) for sents in frames if len(sents))
 
     out_schema = MENTIONS_SCHEMA
     if project is not None:

@@ -22,7 +22,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline.extract import _sentences_rows
+from ..pipeline.extract import _sentences_frame
 from ..lang.normalize import (
     normalize_unicode,
     normalize_unicode_aggressively,
@@ -241,7 +241,7 @@ def read_document_json(
         import hashlib
 
         for pdf in batches:
-            rows = []
+            docs, meta_json, meta_kinds_json = [], [], []
             for line in pdf["value"]:
                 line = (line or "").strip()
                 if not line:
@@ -251,15 +251,14 @@ def read_document_json(
                     doc_to_sentences(doc, max_tokens, extra_token_fields)
                 )
                 sha = hashlib.sha256(line.encode("utf-8")).hexdigest()
+                docs.append((str(doc.get("id")), sha, None, sentences))
                 vals, kinds = _meta_values(doc.get("metadata"))
-                mj, mk = json.dumps(vals), json.dumps(kinds)
-                for r in _sentences_rows(
-                    str(doc.get("id")), sha, None, sentences, extra_token_fields
-                ):
-                    r["meta_json"] = mj
-                    r["meta_kinds_json"] = mk
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+                meta_json += [json.dumps(vals)] * len(sentences)
+                meta_kinds_json += [json.dumps(kinds)] * len(sentences)
+            frame = _sentences_frame(docs, extra_token_fields)
+            frame["meta_json"] = meta_json
+            frame["meta_kinds_json"] = meta_kinds_json
+            yield frame
 
     df = lines.mapInPandas(fn, out_schema)
     if not expand_metadata:

@@ -87,7 +87,7 @@ def read_processors_json(
 
     import pandas as pd
 
-    from ..pipeline.extract import _sentences_rows
+    from ..pipeline.extract import _sentences_frame
     from ..schema import sentences_schema
     from .document_json import _fill_layers, doc_to_sentences
 
@@ -95,7 +95,7 @@ def read_processors_json(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
+            docs = []
             for line in pdf["value"]:
                 line = (line or "").strip()
                 if not line:
@@ -105,11 +105,7 @@ def read_processors_json(
                 sentences = _fill_layers(
                     doc_to_sentences(doc.to_dict(), max_tokens, tuple(extra_token_fields))
                 )
-                rows.extend(
-                    _sentences_rows(
-                        doc.id, sha, None, sentences, tuple(extra_token_fields)
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+                docs.append((doc.id, sha, None, sentences))
+            yield _sentences_frame(docs, tuple(extra_token_fields))
 
     return spark.read.text(path).mapInPandas(fn, out_schema)

@@ -23,21 +23,13 @@ def sentence_batch_from_texts(texts: Sequence[str]) -> SentenceBatch:
     )
 
 
-def sentence_batch_from_docs(
-    sentences: List[dict], build_inout: bool = True, pre_normalized: bool = False
-) -> SentenceBatch:
+def sentence_batch_from_docs(sentences: List[dict], build_inout: bool = True) -> SentenceBatch:
     """Build a batch from annotated-sentence dicts with keys:
     ``raw word lemma tag chunk entity`` (token lists), ``edges`` (list of
     (src, dst, label)), ``roots`` (list of int), ``mentions``
     (dict label -> [(start, end), …]). ``build_inout=False`` skips the
     per-token incoming/outgoing label lists (only needed when a pattern
     queries those fields).
-
-    ``pre_normalized=True``: trust the input to be already sanitized +
-    NFKC'd with a precomputed ``norm`` layer (true for this engine's own
-    annotators, code_tokenizer.annotate_text/annotate_code) — skips the
-    redundant re-normalization the fused one-shot path would otherwise pay
-    per token.
 
     Keys beyond the built-ins and the reserved ``edges``/``roots``/
     ``mentions`` become extra token layers verbatim — arbitrary configured
@@ -59,32 +51,22 @@ def sentence_batch_from_docs(
     roots = []
     mentions = []
     for s in sentences:
-        if pre_normalized:
-            raw = list(s["raw"])
-            word = list(s.get("word", s["raw"]))
-        else:
-            raw = [sanitize_token(normalize_unicode(t)) for t in s["raw"]]
-            word = [sanitize_token(normalize_unicode(t)) for t in s.get("word", s["raw"])]
+        raw = [sanitize_token(normalize_unicode(t)) for t in s["raw"]]
+        word = [sanitize_token(normalize_unicode(t)) for t in s.get("word", s["raw"])]
         num_tokens.append(len(raw))
         layers["raw"].append(raw)
         layers["word"].append(word)
         # norm is the synonym union of raw+word normalized variants: the
         # norm layer holds the word variant, norm_alt the raw variant where
         # it differs (None otherwise — raw==word in all reference fixtures)
-        if pre_normalized and "norm" in s and word == raw:
-            norm = list(s["norm"])
-            norm_alt = None
-        else:
-            norm = [normalize_unicode_aggressively(t) for t in word]
-            norm_alt = [normalize_unicode_aggressively(t) for t in raw]
-            norm_alt = norm_alt if norm_alt != norm else None
+        norm = [normalize_unicode_aggressively(t) for t in word]
+        norm_alt = [normalize_unicode_aggressively(t) for t in raw]
+        norm_alt = norm_alt if norm_alt != norm else None
         layers["norm"].append(norm)
         layers["norm_alt"].append(norm_alt)
         for k in ("lemma", "tag", "chunk", "entity", *extra_names):
             v = s.get(k)
-            if v and not pre_normalized:
-                v = [normalize_unicode(t) for t in v]
-            layers[k].append(list(v) if v else None)
+            layers[k].append([normalize_unicode(t) for t in v] if v else None)
         e = s.get("edges") or []
         edges.append(e)
         roots.append(s.get("roots") or [])
@@ -93,14 +75,7 @@ def sentence_batch_from_docs(
             # derived per-token incoming/outgoing label lists
             inc = [[] for _ in raw]
             out = [[] for _ in raw]
-            if isinstance(e, tuple) and len(e) == 3 and hasattr(e[0], "dtype"):
-                # vectorized (src, dst, label) array triple from an annotator
-                # (the dtype check keeps a plain 3-tuple of (src, dst, label)
-                # edge tuples on the generic path below)
-                edge_iter = zip(e[0].tolist(), e[1].tolist(), e[2].tolist())
-            else:
-                edge_iter = iter(e)
-            for (src, dst, lab) in edge_iter:
+            for (src, dst, lab) in e:
                 if 0 <= src < len(raw) and 0 <= dst < len(raw):
                     out[src].append(lab)
                     inc[dst].append(lab)

@@ -714,36 +714,6 @@ def test_cost_model_routes_by_selectivity(spark, index):
     assert index.estimated_candidates(pf.PFTrue()) is None
 
 
-def test_postings_sql_route_equals_python_route(spark):
-    """The JVM postings builder (r6) must emit exactly the mapInPandas
-    route's rows — fields, terms, buckets and position lists."""
-    from odinson_spark.index import _bucket, _postings_of, _postings_of_sql
-    from odinson_spark.pipeline.extract import tokenize_documents
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wb = tokenize_documents(docs).withColumn(
-        "doc_bucket", _bucket(F.col("doc_id"), 4)
-    ).withColumn("gen", F.lit(0).cast("long"))
-    cols = [c for c in
-            ("raw", "word", "norm", "norm_alt", "lemma", "tag", "chunk",
-             "entity", "incoming_flat", "outgoing_flat")
-            if c in wb.columns]
-    py = _postings_of(wb, cols, 8)
-    sql = _postings_of_sql(wb, cols, 8)
-    assert py.schema == sql.schema
-    key = ["field", "term", "doc_bucket", "doc_id", "sent_id", "tbucket"]
-    a = sorted(
-        (tuple(r[k] for k in key), tuple(r["positions"]) if r["positions"] is not None else None)
-        for r in py.collect()
-    )
-    b = sorted(
-        (tuple(r[k] for k in key), tuple(r["positions"]) if r["positions"] is not None else None)
-        for r in sql.collect()
-    )
-    assert a == b and len(a) > 0
-
-
 def test_idx_graph_edge_anchor_in_plan(index, scan_engine):
     """An edge-anchored pattern through the index must (a) equal the scan
     path and (b) actually use the outgoing_flat postings lookup when the

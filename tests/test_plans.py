@@ -10,6 +10,7 @@ from odinson_spark.pipeline.extract import (
     extract_mentions_df,
     required_columns,
     tokenize_documents,
+    tokenize_repos,
 )
 from odinson_spark.pipeline.oneshot import extract_one_shot, text_prefilter_column
 from odinson_spark.plans.prefilter import (
@@ -90,20 +91,52 @@ def test_text_prefilter_column_sql():
     assert "fast" in s and "table" in s
 
 
+CODE_GRAMMAR = """
+rules:
+  - name: call-site
+    label: Call
+    type: basic
+    priority: 1
+    pattern: |
+      [entity=CALL] [word="("]
+  - name: assigned-call
+    label: Assigned
+    type: basic
+    priority: 2
+    pattern: |
+      (?<var> [entity=VAR]) >assign (?<call> @Call)
+"""
+
+
 def test_fused_equals_staged(spark):
     docs = spark.createDataFrame(
         [(1, "alpha join beta gamma", "en"), (2, "join alone", "en")],
         "doc_id long, text string, lang string",
     )
+    # multi-line files: every line is a sentence, so sent_id runs past 0
+    repos = spark.createDataFrame(
+        [
+            ("r", "a.py", "c1", "python", "x = foo(a, b)\nreturn bar(x)\ny = baz(1)\n"),
+            ("r", "b.py", "c1", "python", "z = qux()"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
     import __spark_entry__ as em
 
-    extractors, _ = RuleReader().compile_rules(em.EVENT_GRAMMAR)
-    staged = extract_mentions_df(
-        apply_prefilter(tokenize_documents(docs), extractors), extractors
-    )
-    fused = extract_one_shot(docs, extractors)
+    text_rules, _ = RuleReader().compile_rules(em.EVENT_GRAMMAR)
+    code_rules, _ = RuleReader().compile_rules(CODE_GRAMMAR)
     key = lambda r: (r.doc_id, r.sent_id, r.start, r.end, r.found_by)
-    assert sorted(map(key, staged.collect())) == sorted(map(key, fused.collect()))
+    for inputs, extractors, tokenize, mode, use_state in (
+        (docs, text_rules, tokenize_documents, "text", False),
+        (repos, code_rules, tokenize_repos, "code", True),
+    ):
+        staged = extract_mentions_df(
+            apply_prefilter(tokenize(inputs), extractors), extractors, use_state=use_state
+        )
+        fused = extract_one_shot(inputs, extractors, mode=mode, use_state=use_state)
+        want = sorted(map(key, staged.collect()))
+        assert want, mode
+        assert want == sorted(map(key, fused.collect())), mode
 
 
 def test_fingerprints_plan_has_no_python_stage(spark):
