@@ -29,6 +29,7 @@ from odinson_spark.ops import dedup as dd
 from odinson_spark.ops import similarity as sim
 from odinson_spark.ops import text as tx
 from odinson_spark.ops.multimodal import attach_binary_payload, extract_media_features
+from odinson_spark.pipeline import linking
 from odinson_spark.pipeline.extract import (
     apply_prefilter,
     extract_mentions_df,
@@ -46,6 +47,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize_documents(_t(spark, sf_dir, "documents"))
+
+
+def _minhash_pairs(documents: DataFrame) -> DataFrame:
+    """(id_a, id_b) MinHash-LSH candidates at the dedup oracle's banding."""
+    return linking.lsh_candidate_pairs(documents, "doc_id", "text", n_hashes=16, bands=2)
 
 
 def _run_pattern(
@@ -345,9 +351,10 @@ rules:
     def kg_canonical(s, d):
         """The full downstream KG path, oracle-checked: triples → entity
         surfaces → MinHash-LSH blocking (pipeline stage 1) → exact integer
-        char-3-gram jaccard scoring (stage 2) → connected-components
-        canonicalization (stage 3; DuckDB mirrors it with a recursive CTE).
-        Output: (surface, canonical) where canonical = min surface of the
+        char-3-gram jaccard scoring (stage 2), both the KG build's own
+        ``pipeline.linking`` code → connected-components canonicalization
+        (stage 3; DuckDB mirrors it with a recursive CTE). Output:
+        (surface, canonical) where canonical = min surface of the
         equivalence class."""
         from odinson_spark.pipeline.components import connected_components_star
 
@@ -359,53 +366,11 @@ rules:
             .union(triples.select(F.col("obj_text").alias("surface")))
             .distinct()
         )
-        sdf = surfaces.select(
-            F.col("surface").alias("doc_id"), F.col("surface").alias("text")
+        cand = linking.lsh_candidate_pairs(
+            surfaces, "surface", "surface", n_hashes=16, bands=2
         )
-        cand = dd.minhash_lsh_pairs(sdf)
-
-        def grams(c):
-            padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-            return F.when(
-                F.length(padded) >= 3,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.length(padded) - 2),
-                        lambda i: padded.substr(i, F.lit(3)),
-                    )
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-
-        g = surfaces.select(
-            F.col("surface").alias("_s"), grams(F.col("surface")).alias("_g")
-        ).withColumn("_n", F.size("_g"))
-        scored = (
-            cand.join(
-                g.select(
-                    F.col("_s").alias("doc_a"),
-                    F.col("_g").alias("_ga"),
-                    F.col("_n").alias("_na"),
-                ),
-                "doc_a",
-            )
-            .join(
-                g.select(
-                    F.col("_s").alias("doc_b"),
-                    F.col("_g").alias("_gb"),
-                    F.col("_n").alias("_nb"),
-                ),
-                "doc_b",
-            )
-            .withColumn("_ni", F.size(F.array_intersect("_ga", "_gb")))
-            .withColumn(
-                "_jacc_e6",
-                F.expr("CAST(_ni AS BIGINT) * 1000000 DIV (_na + _nb - _ni)"),
-            )
-        )
-        kept = scored.filter(F.col("_jacc_e6") >= 500000).select("doc_a", "doc_b")
-        cc = connected_components_star(
-            surfaces, kept, id_col="surface", src_col="doc_a", dst_col="doc_b"
-        )
+        kept = linking.score_pairs(cand, surfaces, "surface", "surface", threshold=0.5)
+        cc = connected_components_star(surfaces, kept, id_col="surface")
         return cc.select(
             F.col("id").alias("surface"), F.col("component").alias("canonical")
         ).orderBy("surface")
@@ -503,8 +468,8 @@ rules:
     q["dedup_ngram_jaccard"] = lambda s, d: dd.ngram_jaccard_pairs(
         _t(s, d, "documents"), n=3, threshold=0.05
     ).orderBy("doc_a", "doc_b")
-    q["dedup_minhash_lsh"] = lambda s, d: dd.minhash_lsh_pairs(
-        _t(s, d, "documents")
+    q["dedup_minhash_lsh"] = lambda s, d: _minhash_pairs(_t(s, d, "documents")).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     ).orderBy("doc_a", "doc_b")
 
     def dedup_clusters(s, d):
@@ -519,12 +484,8 @@ rules:
         from odinson_spark.pipeline.components import connected_components_star
 
         docs = _t(s, d, "documents")
-        pairs = dd.minhash_lsh_pairs(docs)
         comp = connected_components_star(
-            docs.select(F.col("doc_id").alias("id")),
-            pairs,
-            src_col="doc_a",
-            dst_col="doc_b",
+            docs.select(F.col("doc_id").alias("id")), _minhash_pairs(docs)
         )
         return comp.select(
             F.col("id").alias("doc_id"), F.col("component").alias("canonical_id")

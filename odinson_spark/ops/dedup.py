@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-from ..pipeline.linking import MERSENNE_P, _hash_params, add_minhash
+from ..pipeline.linking import MERSENNE_P, SHINGLE_K, _hash_params
 
 # ---------------------------------------------------------------------------
 # exact dedup: hash-groupBy. One shuffle on the hash; at 100 TB this is the
@@ -406,154 +406,21 @@ def _ngram_jaccard_pairs_broadcast(
 
 
 # ---------------------------------------------------------------------------
-# MinHash-LSH near-dup candidates (char-3-gram Jaccard sketch).
-# One narrow signature stage + one shuffle on (band, band_key).
-# Band keys are the literal signature values (joined as strings) so the SQL
-# oracle reproduces buckets exactly.
+# MinHash-LSH near-dup candidates: the operator is
+# pipeline.linking.lsh_candidate_pairs; here is its DuckDB oracle.
 # ---------------------------------------------------------------------------
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 2,
-    k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """Near-dup candidate pairs sharing ≥1 LSH band bucket.
-
-    Skew guard: the band self-join is quadratic in bucket size, so a hot
-    bucket (k identical/boilerplate docs) would emit k²/2 rows per band.
-    Buckets above ``max_bucket_size`` switch to STAR pairs — (min_id, other)
-    for every other member, k-1 rows — which preserves dedup connectivity
-    exactly (connected components are unchanged) while bounding output.
-    The SQL oracle reproduces the all-pairs path bit-for-bit as long
-    as no bucket exceeds the cap (true at gate scale by construction).
-
-    Memory guard: the fused collect_list aggregation materializes each
-    bucket as ONE array row, so over-cap buckets are split off FIRST — a
-    count aggregation (partial-agg, no arrays, spill-safe) over the
-    persisted banding finds them (FEW by definition: each holds >
-    ``max_bucket_size`` members), their star pairs come from a streaming
-    min-join, and only provably-small buckets go through collect_list."""
-    assert n_hashes % bands == 0
-    r = n_hashes // bands
-    sig = add_minhash(
-        documents.select("doc_id", "text"), "text", n_hashes=n_hashes, k=k, seed=seed,
-        project_out=("doc_id",),  # don't ship text back across Arrow
-    )
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.concat_ws(
-                    "-",
-                    F.transform(
-                        F.slice("minhash", i * r + 1, r), lambda x: x.cast("string")
-                    ),
-                ),
-            )
-        ).alias("band", "band_key"),
-    )
-    # ONE window over (band, band_key) tags every row with its bucket size
-    # and bucket min (one exchange + one sort — no self-join, and no
-    # collect_list: a bucket NEVER materializes as a single row, so a
-    # degenerate everything-in-one-bucket corpus streams through the
-    # emitter below with O(max_bucket_size) memory). WindowExec sorts each
-    # physical partition by the partition keys, so bucket rows arrive
-    # CONTIGUOUSLY in the mapInPandas below — it walks the stream, buffers
-    # at most max_bucket_size ids for an all-pairs bucket, and emits star
-    # pairs row-by-row for over-cap buckets (optimization guide §2.4:
-    # operations keyed the same way share one exchange).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "band_key")
-    wo = w.orderBy("doc_id")
-    # rn==1 marks a bucket boundary AND (rows being doc_id-sorted within
-    # the bucket) the bucket minimum — so the Python stage needs neither
-    # the ~150-byte band_key strings nor a _min column: 3 narrow columns
-    # cross Arrow instead of 5 wide ones
-    tagged = (
-        banded.withColumn("_n", F.count(F.lit(1)).over(w))
-        .withColumn("_rn", F.row_number().over(wo))
-        .filter(F.col("_n") > 1)
-        .select("doc_id", "_n", "_rn")
-    )
-    id_type = documents.schema["doc_id"].dataType
-    pair_schema = StructType(
-        [StructField("doc_a", id_type), StructField("doc_b", id_type)]
-    )
-
-    def emit_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tri_cache: dict = {}
-        state = {"ids": [], "first": None}
-
-        def flush(out_a, out_b):
-            ids = state["ids"]
-            if len(ids) > 1:
-                # already ascending (window rows are doc_id-sorted)
-                arr = np.asarray(ids)
-                c = len(arr)
-                tri = tri_cache.get(c)
-                if tri is None:
-                    tri = np.triu_indices(c, k=1)
-                    # memoize small sizes only (tri arrays are quadratic
-                    # in c — don't pin large ones per size)
-                    if c <= 256 and len(tri_cache) < 512:
-                        tri_cache[c] = tri
-                out_a.append(arr[tri[0]])
-                out_b.append(arr[tri[1]])
-            state["ids"] = []
-
-        for pdf in batches:
-            out_a: list = []
-            out_b: list = []
-            star_a: list = []
-            star_b: list = []
-            for doc, n_, rn in zip(pdf["doc_id"], pdf["_n"], pdf["_rn"]):
-                if rn == 1:
-                    flush(out_a, out_b)
-                    state["first"] = doc
-                if n_ <= max_bucket_size:
-                    state["ids"].append(doc)
-                elif rn > 1:
-                    # star fallback: (min_id, other) keeps connectivity,
-                    # streamed — nothing buffered for over-cap buckets
-                    star_a.append(state["first"])
-                    star_b.append(doc)
-            if star_a:
-                out_a.append(np.asarray(star_a))
-                out_b.append(np.asarray(star_b))
-            if out_a:
-                yield pd.DataFrame(
-                    {"doc_a": np.concatenate(out_a), "doc_b": np.concatenate(out_b)}
-                )
-        # final bucket of the partition
-        out_a, out_b = [], []
-        flush(out_a, out_b)
-        if out_a:
-            yield pd.DataFrame(
-                {"doc_a": np.concatenate(out_a), "doc_b": np.concatenate(out_b)}
-            )
-
-    return tagged.mapInPandas(emit_pairs, pair_schema).distinct()
-
-
 def minhash_lsh_ctes(
-    table: str = "documents",
-    n_hashes: int = 16,
-    bands: int = 2,
-    k: int = 3,
-    seed: int = 42,
+    table: str = "documents", n_hashes: int = 16, bands: int = 2
 ) -> str:
     """Composable DuckDB CTE chain (no WITH keyword) defining, over
     ``{table}(doc_id, text)``: ``sh`` (distinct k-shingles) and
-    ``lsh_pairs(doc_a, doc_b)`` — the identical candidate-pair set the Spark
-    operator produces. Callers prepend their own CTEs and append a final
-    SELECT."""
-    a, b = _hash_params(n_hashes, seed)
+    ``lsh_pairs(doc_a, doc_b)`` — the identical candidate-pair set
+    ``lsh_candidate_pairs`` produces with the same banding. Callers prepend
+    their own CTEs and append a final SELECT."""
+    a, b = _hash_params(n_hashes)
+    k = SHINGLE_K
     r = n_hashes // bands
     values = ", ".join(f"({i}, {int(a[i])}, {int(b[i])})" for i in range(n_hashes))
     return f"""
@@ -583,16 +450,12 @@ lsh_pairs AS (
 
 
 def minhash_lsh_oracle_sql(
-    table: str = "documents",
-    n_hashes: int = 16,
-    bands: int = 2,
-    k: int = 3,
-    seed: int = 42,
+    table: str = "documents", n_hashes: int = 16, bands: int = 2
 ) -> str:
     """DuckDB SQL computing the identical candidate-pair set."""
     return (
         "WITH "
-        + minhash_lsh_ctes(table, n_hashes, bands, k, seed)
+        + minhash_lsh_ctes(table, n_hashes, bands)
         + "\nSELECT doc_a, doc_b FROM lsh_pairs"
     )
 

@@ -1,47 +1,46 @@
-"""Entity linking: MinHash-LSH blocking + candidate-pair scoring.
+"""Entity linking: MinHash-LSH blocking + candidate-pair scoring — the one
+MinHash-LSH implementation (the KG build, ``kg_canonical`` and the dedup
+gates all run it).
 
 No reference counterpart (Odinson stops at mentions); required by the
 pipeline's north rule. Design:
 
-1. **Signatures** (narrow): per distinct mention surface, k-shingle the
-   normalized string, hash each shingle to a 60-bit integer via md5 (stable
-   across Python/SQL/JVM — the DuckDB oracle reproduces it bit-for-bit),
-   then n_hashes universal-hash permutations ``(a*h + b) mod p`` with
-   p = 2^61-1. Arrow-batched pandas stage, no shuffle.
-2. **Banding** (one shuffle): split the signature into bands, group by
-   (band_idx, band_hash); surfaces sharing a band bucket are candidates.
-   This is the standard LSH trade: P(candidate) ≈ 1-(1-s^r)^b.
-3. **Scoring** (narrow after the self-join): exact Jaccard over shingle sets
-   for candidate pairs, keep pairs ≥ threshold.
+1. **Signatures** (narrow): per row, k-shingle the normalized string, hash
+   each shingle to a 60-bit integer via md5 (stable across Python/SQL/JVM —
+   the DuckDB oracle reproduces it bit-for-bit), then n_hashes
+   universal-hash permutations ``(a*h + b) mod p`` with p = 2^61-1.
+   Arrow-batched pandas stage, no shuffle.
+2. **Banding** (one shuffle): split the signature into bands keyed by the
+   literal values joined as a string; one window over (band, key) tags each
+   row with its bucket size and rank, and a streaming emitter turns each
+   bucket into all pairs, or into star pairs (min id, member) above
+   ``max_bucket_size``. P(candidate) ≈ 1-(1-s^r)^b.
+3. **Scoring** (JVM, two id joins): exact integer Jaccard over the
+   distinct char-3-gram sets of each candidate pair, keep pairs ≥ threshold.
 
-Scale notes: the groupBy key is (band_idx, band_hash) — high cardinality, no
-hot keys by construction (hash-distributed); bucket blowup from degenerate
-surfaces (e.g. empty strings) is capped via ``max_bucket_size``.
+Scale notes: the window key is (band, key) — high cardinality, hot only for
+degenerate (identical) texts, whose buckets the star fallback bounds to
+k−1 rows; no bucket is ever materialized as one row.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from typing import Iterator, List, Sequence, Tuple
+import logging
+from typing import Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 MERSENNE_P = (1 << 61) - 1
 _HASH_BITS_HEX = 15  # 60 bits from md5 hex
-
-import logging
+SHINGLE_K = 3  # character shingle length of signatures and scoring
+HASH_SEED = 42  # seed of the permutation parameters
 
 logger = logging.getLogger(__name__)
 
@@ -87,14 +86,14 @@ def derive_banding(
     return n_hashes, best
 
 
-def _hash_params(n_hashes: int, seed: int = 42) -> Tuple[np.ndarray, np.ndarray]:
+def _hash_params(n_hashes: int, seed: int = HASH_SEED) -> Tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(seed)
     a = rng.randint(1, MERSENNE_P, size=n_hashes, dtype=np.int64).astype(object)
     b = rng.randint(0, MERSENNE_P, size=n_hashes, dtype=np.int64).astype(object)
     return a, b
 
 
-def shingles(s: str, k: int = 3) -> List[str]:
+def shingles(s: str, k: int = SHINGLE_K) -> List[str]:
     s = " " + s.lower() + " "
     if len(s) <= k:
         return [s]
@@ -192,36 +191,73 @@ def batch_signatures(texts, n_hashes: int, k: int, a, b) -> List[List[int]]:
     ]
 
 
-def add_minhash(
-    df: DataFrame,
-    text_col: str,
-    n_hashes: int = 16,
-    k: int = 3,
-    seed: int = 42,
-    out_col: str = "minhash",
-    project_out: "Sequence[str] | None" = None,
-) -> DataFrame:
-    """``project_out`` — optional subset of input columns to carry through
-    the Python stage alongside the signature. Column pruning cannot see
-    through mapInPandas, so callers that only need (id, signature) should
-    not pay Arrow serialization to ship the text column back out."""
-    from ..pipeline.extract import _fan_out
+def emit_bucket_pairs(
+    batches: Iterator[pd.DataFrame], max_bucket_size: int
+) -> Iterator[pd.DataFrame]:
+    """``(_id, _n, _rn)`` window rows → ``(id_a, id_b)`` pairs, streamed.
 
-    df = _fan_out(df)  # signature stage is CPU-bound; small inputs often
-    # arrive as one split and would otherwise run single-task
-    a, b = _hash_params(n_hashes, seed)
-    keep = list(df.columns) if project_out is None else list(project_out)
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + [StructField(out_col, ArrayType(LongType()))]
-    )
+    ``_n`` is the row's bucket size and ``_rn`` its row number inside the
+    bucket by ``_id``. The walk relies on each bucket's rows arriving
+    contiguously, ``_rn`` counting up by one from 1 and ``_id`` ascending
+    (what WindowExec's sort gives); it raises ``ValueError`` where that
+    order does not hold instead of re-sorting. A bucket of at most
+    ``max_bucket_size`` rows buffers its ids and emits all pairs; a larger
+    one emits star pairs (min id, member) row by row, buffering nothing.
+    A repeated id inside a bucket adds no pair."""
+    tri_cache: dict = {}
+    bucket: list = []  # ids of the open all-pairs bucket
+    first = last = None  # min id and latest id of the open bucket
+    last_rn = 0
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep].copy()
-            out[out_col] = batch_signatures(list(pdf[text_col]), n_hashes, k, a, b)
-            yield out
+    def all_pairs(out_a, out_b):
+        if len(bucket) > 1:
+            arr = np.asarray(bucket)
+            c = len(arr)
+            tri = tri_cache.get(c)
+            if tri is None:
+                tri = np.triu_indices(c, k=1)
+                # memoize small sizes only (tri arrays are quadratic in c)
+                if c <= 256 and len(tri_cache) < 512:
+                    tri_cache[c] = tri
+            out_a.append(arr[tri[0]])
+            out_b.append(arr[tri[1]])
 
-    return df.mapInPandas(fn, out_schema)
+    def frame(out_a, out_b):
+        return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
+
+    for pdf in batches:
+        out_a: list = []
+        out_b: list = []
+        star_a: list = []
+        star_b: list = []
+        for id_, n_, rn in zip(pdf["_id"], pdf["_n"], pdf["_rn"]):
+            if rn == 1:
+                all_pairs(out_a, out_b)
+                bucket = []
+                first = id_
+            elif rn != last_rn + 1 or id_ < last:
+                raise ValueError(
+                    f"LSH bucket rows out of order: _rn {rn} id {id_!r} "
+                    f"after _rn {last_rn} id {last!r}"
+                )
+            repeat = rn > 1 and id_ == last
+            last, last_rn = id_, rn
+            if repeat:
+                continue
+            if n_ <= max_bucket_size:
+                bucket.append(id_)
+            elif rn > 1:
+                star_a.append(first)
+                star_b.append(id_)
+        if star_a:
+            out_a.append(np.asarray(star_a))
+            out_b.append(np.asarray(star_b))
+        if out_a:
+            yield frame(out_a, out_b)
+    out_a, out_b = [], []
+    all_pairs(out_a, out_b)  # the partition's last bucket
+    if out_a:
+        yield frame(out_a, out_b)
 
 
 def lsh_candidate_pairs(
@@ -230,22 +266,21 @@ def lsh_candidate_pairs(
     text_col: str,
     n_hashes: int | None = None,
     bands: int | None = None,
-    k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
+    max_bucket_size: int = 1024,
     threshold: float = 0.7,
-    n_rows: int | None = None,
 ) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing ≥1 LSH band bucket.
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, sharing ≥1 LSH
+    band bucket.
 
     ``n_hashes``/``bands`` default to None → derived from the corpus size
-    and the downstream link ``threshold`` (:func:`derive_banding`), so the
-    pipeline needs no caller-supplied tuning at any scale. Pass ``n_rows``
-    (callers usually know it) to skip the ``count()`` the derivation
-    otherwise pays; pass ``n_hashes``/``bands`` explicitly for
-    reproducibility against a fixed oracle."""
+    (one ``count()``) and the downstream link ``threshold``
+    (:func:`derive_banding`); pass both for reproducibility against a fixed
+    oracle (``dedup.minhash_lsh_ctes`` reproduces the pairs exactly while no
+    bucket exceeds ``max_bucket_size``)."""
+    from .extract import _fan_out
+
     if n_hashes is None or bands is None:
-        n = n_rows if n_rows is not None else df.count()
+        n = df.count()
         if bands is None:
             # derive bands FOR the caller's hash count when one was given —
             # deriving both independently can pair a non-divisor (or a band
@@ -261,41 +296,53 @@ def lsh_candidate_pairs(
             "threshold=%.2f)", n_hashes, bands, n, threshold,
         )
     assert n_hashes % bands == 0
-    rows_per_band = n_hashes // bands
-    sig = add_minhash(
-        df.select(id_col, text_col), text_col, n_hashes, k, seed,
-        project_out=(id_col,),
+    r = n_hashes // bands
+    a, b = _hash_params(n_hashes)
+    id_type = df.schema[id_col].dataType
+    # the signature stage is CPU-bound; small inputs often arrive as one
+    # split and would otherwise run single-task
+    docs = _fan_out(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
+
+    def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf[["_id"]].copy()  # the text does not cross Arrow back
+            out["_sig"] = batch_signatures(list(pdf["_text"]), n_hashes, SHINGLE_K, a, b)
+            yield out
+
+    sig = docs.mapInPandas(
+        sign,
+        StructType([StructField("_id", id_type), StructField("_sig", ArrayType(LongType()))]),
     )
+    # band keys are the literal signature values joined as strings, so the
+    # SQL oracle reproduces the buckets exactly
     banded = sig.select(
-        F.col(id_col).alias("_id"),
+        "_id",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.xxhash64(
-                    F.slice("minhash", i * rows_per_band + 1, rows_per_band)
+                lambda i: F.concat_ws(
+                    "-",
+                    F.transform(F.slice("_sig", i * r + 1, r), lambda x: x.cast("string")),
                 ),
             )
-        ).alias("band_idx", "band_hash"),
+        ).alias("_band", "_key"),
     )
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.collect_list("_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
+    # ONE window over (band, key) tags every row with its bucket size and
+    # row number (one exchange + one sort, no self-join, no per-bucket array
+    # row), so a degenerate everything-in-one-bucket corpus streams through
+    # the emitter with O(max_bucket_size) memory. _rn == 1 marks a bucket
+    # boundary and its minimum id, so only 3 narrow columns cross Arrow.
+    w = Window.partitionBy("_band", "_key")
+    tagged = (
+        banded.withColumn("_n", F.count(F.lit(1)).over(w))
+        .withColumn("_rn", F.row_number().over(w.orderBy("_id")))
+        .filter(F.col("_n") > 1)
+        .select("_id", "_n", "_rn")
     )
-    pairs = buckets.select(
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "ids",
-                        lambda x: F.transform("ids", lambda y: F.struct(x.alias("a"), y.alias("b"))),
-                    )
-                ),
-                lambda p: p["a"] < p["b"],
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b")).distinct()
-    return pairs
+    return tagged.mapInPandas(
+        functools.partial(emit_bucket_pairs, max_bucket_size=max_bucket_size),
+        StructType([StructField("id_a", id_type), StructField("id_b", id_type)]),
+    ).distinct()
 
 
 def score_pairs(
@@ -303,37 +350,42 @@ def score_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """Exact shingle-Jaccard on candidate pairs; keeps pairs ≥ threshold.
-    Join strategy: surfaces table is the small side post-dedup → broadcast
-    when it fits, else AQE decides."""
-    surf = df.select(F.col(id_col).alias("_sid"), F.col(text_col).alias("_stext"))
-    joined = (
-        pairs.join(surf.withColumnRenamed("_sid", "id_a").withColumnRenamed("_stext", "text_a"), "id_a")
-        .join(surf.withColumnRenamed("_sid", "id_b").withColumnRenamed("_stext", "text_b"), "id_b")
-    )
-    out_schema = StructType(
-        [
-            StructField("id_a", joined.schema["id_a"].dataType),
-            StructField("id_b", joined.schema["id_b"].dataType),
-            StructField("score", DoubleType()),
-        ]
-    )
+    """Exact char-3-gram Jaccard of candidate pairs, in integers on the JVM.
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scores = []
-            for ta, tb in zip(pdf["text_a"], pdf["text_b"]):
-                sa = set(shingles((ta or "").lower(), k))
-                sb = set(shingles((tb or "").lower(), k))
-                inter = len(sa & sb)
-                union = len(sa | sb) or 1
-                scores.append(inter / union)
-            out = pdf[["id_a", "id_b"]].copy()
-            out["score"] = scores
-            yield out
+    Grams are the distinct 3-grams of ``' ' || lower(text) || ' '``; a pair
+    is kept when ``ni * 10^6 DIV (na + nb - ni) >= round(threshold * 10^6)``,
+    the test the DuckDB oracle of ``kg_canonical`` runs. Returns
+    ``(id_a, id_b, score)`` with ``score = ni / (na + nb - ni)``."""
+    k = SHINGLE_K
+    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    grams = F.when(
+        F.length(padded) >= k,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.length(padded) - (k - 1)),
+                lambda i: padded.substr(i, F.lit(k)),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    g = df.select(F.col(id_col).alias("_id"), grams.alias("_g"))
 
-    scored = joined.mapInPandas(fn, out_schema)
-    return scored.filter(F.col("score") >= threshold)
+    def side(s):
+        return g.select(
+            F.col("_id").alias(f"id_{s}"),
+            F.col("_g").alias(f"_g{s}"),
+            F.size("_g").alias(f"_n{s}"),
+        )
+
+    scored = (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .withColumn("_ni", F.size(F.array_intersect("_ga", "_gb")))
+        # an empty union only arises from two empty gram sets
+        .withColumn("_u", F.greatest(F.col("_na") + F.col("_nb") - F.col("_ni"), F.lit(1)))
+    )
+    cutoff = round(threshold * 1_000_000)
+    return scored.filter(
+        F.expr(f"CAST(_ni AS BIGINT) * 1000000 DIV _u >= {cutoff}")
+    ).select("id_a", "id_b", (F.col("_ni") / F.col("_u")).alias("score"))

@@ -22,22 +22,15 @@ def _node_id(surface_col, label_col):
 
 
 def build_graph(
-    triples: DataFrame,
-    link_threshold: float = 0.7,
-    n_hashes: int | None = None,
-    bands: int | None = None,
-    n_surfaces: int | None = None,
+    triples: DataFrame, link_threshold: float = 0.7
 ) -> Tuple[DataFrame, DataFrame]:
     """triples → (nodes, edges) with canonical ids.
 
     Stages: surface dedup (one shuffle) → LSH linking (one shuffle) →
     connected components (iterative) → id rewrite (broadcast join: the
-    canonical-map is tiny relative to triples).
-
-    ``n_hashes``/``bands`` default to None → derived inside
-    :func:`lsh_candidate_pairs` from the surface count and
-    ``link_threshold`` (no caller tuning at any scale); ``n_surfaces``
-    skips that derivation count when the caller knows it."""
+    canonical-map is tiny relative to triples). Surfaces whose 3-gram
+    Jaccard is at least ``link_threshold`` are linked; the LSH banding is
+    derived from the surface count and that threshold."""
     subj = triples.select(
         F.col("subj_text").alias("surface"), F.col("label").alias("label")
     )
@@ -53,8 +46,7 @@ def build_graph(
     )
     # entity linking: near-duplicate surfaces become one canonical node
     pairs = lsh_candidate_pairs(
-        surfaces, id_col="node_id", text_col="surface", n_hashes=n_hashes,
-        bands=bands, threshold=link_threshold, n_rows=n_surfaces,
+        surfaces, id_col="node_id", text_col="surface", threshold=link_threshold
     )
     links = score_pairs(pairs, surfaces, "node_id", "surface", threshold=link_threshold)
     # large-star/small-star: O(log n) rounds regardless of link-chain

@@ -1,10 +1,12 @@
 """Scale guards on the dedup/LSH joins: hot buckets must not go quadratic,
 and the simhash pairing stage must be lossless under its banding guarantee."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from odinson_spark.ops.dedup import minhash_lsh_pairs, simhash_pairs, simhash_signatures
+from odinson_spark.ops.dedup import simhash_pairs, simhash_signatures
+from odinson_spark.pipeline.linking import emit_bucket_pairs, lsh_candidate_pairs
 
 
 def test_minhash_lsh_hot_bucket_is_bounded(spark):
@@ -16,10 +18,12 @@ def test_minhash_lsh_hot_bucket_is_bounded(spark):
         [(i, "the same boilerplate text repeated everywhere") for i in range(n)],
         "doc_id long, text string",
     )
-    pairs = minhash_lsh_pairs(docs, max_bucket_size=64).collect()
+    pairs = lsh_candidate_pairs(
+        docs, "doc_id", "text", n_hashes=16, bands=2, max_bucket_size=64
+    ).collect()
     assert len(pairs) == n - 1
-    assert all(r.doc_a == 0 for r in pairs)  # star centered at min doc_id
-    assert {r.doc_b for r in pairs} == set(range(1, n))
+    assert all(r.id_a == 0 for r in pairs)  # star centered at min doc_id
+    assert {r.id_b for r in pairs} == set(range(1, n))
 
 
 def test_minhash_lsh_small_buckets_unchanged(spark):
@@ -33,8 +37,35 @@ def test_minhash_lsh_small_buckets_unchanged(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()}
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in lsh_candidate_pairs(docs, "doc_id", "text", n_hashes=16, bands=2).collect()
+    }
     assert pairs == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_emit_bucket_pairs_requires_window_order():
+    # two buckets as the (band, key) window emits them: contiguous, _rn
+    # counting up from 1, ids ascending; the second is over the cap (star)
+    rows = pd.DataFrame(
+        {
+            "_id": [1, 4, 4, 7, 2, 3, 5, 8, 9],
+            "_n": [4, 4, 4, 4, 5, 5, 5, 5, 5],
+            "_rn": [1, 2, 3, 4, 1, 2, 3, 4, 5],
+        }
+    )
+    out = pd.concat(emit_bucket_pairs(iter([rows[:3], rows[3:]]), max_bucket_size=4))
+    pairs = set(zip(out["id_a"], out["id_b"]))
+    # the repeated id 4 adds no self-pair; the star bucket pairs its min id 2
+    assert pairs == {(1, 4), (1, 7), (4, 7), (2, 3), (2, 5), (2, 8), (2, 9)}
+    assert len(out) == len(pairs)
+    shuffled = rows.sample(frac=1.0, random_state=3)
+    with pytest.raises(ValueError, match="out of order"):
+        list(emit_bucket_pairs(iter([shuffled]), max_bucket_size=4))
+    # row numbers in order but ids descending inside a bucket
+    descending = pd.DataFrame({"_id": [5, 3], "_n": [2, 2], "_rn": [1, 2]})
+    with pytest.raises(ValueError, match="out of order"):
+        list(emit_bucket_pairs(iter([descending]), max_bucket_size=4))
 
 
 def test_simhash_pairs_finds_planted_near_dups(spark):

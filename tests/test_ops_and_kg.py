@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from odinson_spark.ops.dedup import (
     embedding_cosine_pairs,
     exact_dup_groups,
-    minhash_lsh_pairs,
     simhash_signatures,
 )
 from odinson_spark.ops.similarity import cosine_topk, lsh_ann_topk
@@ -41,7 +40,10 @@ def test_minhash_lsh_finds_near_dups(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()}
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in lsh_candidate_pairs(docs, "doc_id", "text", n_hashes=16, bands=2).collect()
+    }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
