@@ -353,7 +353,9 @@ rules:
         surfaces → MinHash-LSH blocking (pipeline stage 1) → exact integer
         char-3-gram jaccard scoring (stage 2), both the KG build's own
         ``pipeline.linking`` code → connected-components canonicalization
-        (stage 3; DuckDB mirrors it with a recursive CTE). Output:
+        (stage 3: the KG build's ``connected_components_star``, which labels
+        these few string-id links on the driver; DuckDB mirrors it with a
+        recursive CTE). Output:
         (surface, canonical) where canonical = min surface of the
         equivalence class."""
         from odinson_spark.pipeline.components import connected_components_star
@@ -476,11 +478,13 @@ rules:
         """Composite dedup: minhash-LSH candidate pairs → connected
         components → one canonical id per document (the full corpus-dedup
         shape a training pipeline runs: each cluster keeps min doc_id).
-        Large-star/small-star components: the near-dup graph grows long
-        chains with corpus size (label propagation's 20-iteration budget
-        overflows at sf0.1 — inherited, pre-dated this round), while the
-        star rounds are O(log n) in diameter. Labels identical (min id of
-        the component), oracle unchanged."""
+        ``connected_components_star``: the near-dup graph grows long chains
+        with corpus size, so the labelling must not loop per unit of
+        diameter. Pair sets within Spark's broadcast budget are labelled on
+        the driver (min-hooking + pointer jumping; a chain at least halves
+        per pass); larger ones run large-star/small-star rounds, O(log n)
+        in diameter.
+        Labels identical (min id of the component), oracle unchanged."""
         from odinson_spark.pipeline.components import connected_components_star
 
         docs = _t(s, d, "documents")

@@ -8,6 +8,8 @@ the correctness gate checks. Scale notes are per-operator.
 from __future__ import annotations
 
 import hashlib
+import logging
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator, List
 
 import numpy as np
@@ -18,6 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from ..pipeline.linking import MERSENNE_P, SHINGLE_K, _hash_params
+from ..routes import log_route
+
+logger = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # exact dedup: hash-groupBy. One shuffle on the hash; at 100 TB this is the
@@ -131,7 +136,9 @@ def ngram_jaccard_pairs(
     # form reads (part of) a real column; for raw reads this is the cheaper
     # probe and for filtered inputs both scan once
     probe = documents.count()
-    if probe <= max_broadcast_docs:
+    route = "broadcast" if probe <= max_broadcast_docs else "join"
+    log_route(logger, "ngram_jaccard_pairs", route, probe, max_broadcast_docs, "docs")
+    if route == "broadcast":
         return _ngram_jaccard_pairs_broadcast(documents, n, threshold, max_postings)
     grams = (
         _word_ngrams_pandas(documents, n)
@@ -610,6 +617,21 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 # ---------------------------------------------------------------------------
 
 
+def round_half_up(x: np.ndarray, scale: int) -> np.ndarray:
+    """Spark's ``round(double, scale)``: HALF_UP (ties away from zero) on the
+    value's shortest decimal form, and never a negative zero.
+
+    ``np.round`` rounds ties to even on the binary value, so 0.00015 → 0.0001
+    where Spark gives 0.0002. Only values within 1e-9 of a tie after scaling
+    can differ; those few are re-rounded exactly through ``Decimal(repr)``."""
+    out = np.round(x, scale)
+    y = np.abs(x) * 10.0**scale
+    for i in np.flatnonzero(np.abs(y - np.floor(y) - 0.5) < 1e-9):
+        d = Decimal(repr(float(x.flat[i]))).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
+        out.flat[i] = float(d)
+    return out + 0.0
+
+
 def _cosine_col(va, vb):
     dot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     na = F.sqrt(F.aggregate(F.transform(va, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
@@ -773,7 +795,7 @@ def embedding_cosine_pairs(
             a_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             a_norms = np.sqrt(np.einsum("ij,ij->i", a_mat, a_mat))
             sims = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
-            sims = np.round(sims, 4)
+            sims = round_half_up(sims, 4)
             ii, jj = np.nonzero((sims >= threshold) & (a_ids[:, None] < b_ids[None, :]))
             yield pd.DataFrame(
                 {

@@ -27,7 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _cosine_col
+from ..routes import log_route
+from .dedup import _cosine_col, round_half_up
 
 _QUANT = 65536  # power of two: scaling is exact in IEEE double
 
@@ -112,7 +113,9 @@ def cosine_topk(
         .limit(max_broadcast_queries + 1)
         .toPandas()
     )
-    if len(qpdf) <= max_broadcast_queries:
+    route = "broadcast" if len(qpdf) <= max_broadcast_queries else "crossJoin"
+    log_route(logger, "cosine_topk", route, len(qpdf), max_broadcast_queries, "queries")
+    if route == "broadcast":
         return _cosine_topk_broadcast(embeddings, queries, k, query_id, vec_id, qpdf)
     base = embeddings.select(
         F.col(vec_id).alias("nbr_id"), F.col("embedding").cast("array<double>").alias("vb")
@@ -181,7 +184,7 @@ def _cosine_topk_broadcast(
             n_ids = pdf["nbr_id"].to_numpy()
             n_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
             n_norms = np.sqrt(np.einsum("ij,ij->i", n_mat, n_mat))
-            sims = np.round((b_qmat @ n_mat.T) / np.outer(b_qnorms, n_norms), 4)
+            sims = round_half_up((b_qmat @ n_mat.T) / np.outer(b_qnorms, n_norms), 4)
             all_ids.append(n_ids)
             all_sims.append(sims)
         if not all_ids:

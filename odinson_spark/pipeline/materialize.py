@@ -27,8 +27,9 @@ def build_graph(
     """triples → (nodes, edges) with canonical ids.
 
     Stages: surface dedup (one shuffle) → LSH linking (one shuffle) →
-    connected components (iterative) → id rewrite (broadcast join: the
-    canonical-map is tiny relative to triples). Surfaces whose 3-gram
+    connected components (labelled on the driver when the links fit the
+    broadcast budget, star rounds above it) → id rewrite (broadcast join:
+    the canonical-map is tiny relative to triples). Surfaces whose 3-gram
     Jaccard is at least ``link_threshold`` are linked; the LSH banding is
     derived from the surface count and that threshold."""
     subj = triples.select(
@@ -49,8 +50,8 @@ def build_graph(
         surfaces, id_col="node_id", text_col="surface", threshold=link_threshold
     )
     links = score_pairs(pairs, surfaces, "node_id", "surface", threshold=link_threshold)
-    # large-star/small-star: O(log n) rounds regardless of link-chain
-    # diameter (label propagation's fixed budget overflows on long chains)
+    # a KG's link graph is small: one collect, labelled on the driver; past
+    # the broadcast budget, O(log n) star rounds whatever the chain diameter
     comp = connected_components_star(
         surfaces.select("node_id"), links, id_col="node_id"
     ).withColumnRenamed("component", "canonical_id")

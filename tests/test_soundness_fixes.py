@@ -2,6 +2,10 @@
 non-ASCII text, incoming/outgoing prefilter columns, symmetric metadata
 normalization, deterministic salting, connected-components convergence."""
 
+import contextlib
+import logging
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,19 +206,118 @@ def _path_graph(spark, n):
     return verts, edges
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Set spark.sql.autoBroadcastJoinThreshold (the CC route's byte budget;
+    -1 forces the star rounds) and restore it afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _cc_routed(spark, caplog, verts, edges, threshold=None):
+    """(labels, route record) of one connected_components_star call."""
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="odinson_spark.pipeline.components"):
+        if threshold is None:
+            labels = connected_components_star(verts, edges).collect()
+        else:
+            with _broadcast_threshold(spark, threshold):
+                labels = connected_components_star(verts, edges).collect()
+    recs = [r.route_decision for r in caplog.records if hasattr(r, "route_decision")]
+    assert len(recs) == 1
+    return {r.id: r.component for r in labels}, recs[0]
+
+
 def test_cc_propagation_raises_on_nonconvergence(spark):
     # one round cannot collapse a 12-path into a star: the budget guard must
-    # raise, never hand back partial labels
+    # raise, never hand back partial labels (a 12-path fits the broadcast
+    # budget, so the star rounds are forced)
     verts, edges = _path_graph(spark, 12)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(verts, edges, max_iterations=1)
+    with _broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components_star(verts, edges, max_iterations=1)
 
 
 @pytest.mark.slow
 def test_cc_star_converges_on_long_path(spark):
     verts, edges = _path_graph(spark, 50)
-    out = connected_components_star(verts, edges).collect()
+    with _broadcast_threshold(spark, "-1"):
+        out = connected_components_star(verts, edges).collect()
     assert len(out) == 50 and all(r.component == 0 for r in out)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_cc_local_finish_equals_star_rounds(spark, caplog, id_type):
+    import random
+
+    rng = random.Random(11)
+    n = 80
+    key = (lambda i: i) if id_type == "long" else (lambda i: f"n{i}")
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+    edges += [(a, a) for a, _ in edges[:5]]  # self-loops
+    edges += edges[5:15] + [(b, a) for a, b in edges[15:30]]  # dups, reversed
+    rng.shuffle(edges)
+    # ids 60..79 are isolated vertices
+    verts = spark.createDataFrame([(key(i),) for i in range(n)], f"id {id_type}")
+    edf = spark.createDataFrame(
+        [(key(a), key(b)) for a, b in edges], f"id_a {id_type}, id_b {id_type}"
+    )
+    local, rec = _cc_routed(spark, caplog, verts, edf)
+    assert rec["route"] == "local" and rec["star_rounds"] == 0
+    star, rec = _cc_routed(spark, caplog, verts, edf, threshold="-1")
+    assert rec["route"] == "star" and rec["star_rounds"] >= 1
+    assert local == star and len(local) == n
+    assert all(local[key(i)] == key(i) for i in range(60, n))
+
+
+def test_cc_local_finish_on_long_shuffled_path(spark, caplog):
+    # 100k-node path whose ids are a bijection of 0..n-1 (i*a+b mod n,
+    # gcd(a, n) = 1): one component, min id 0, diameter n-1
+    n, a, b = 100_000, 7919, 12345
+    verts = spark.range(n)
+    perm = lambda c: (c * a + b) % n  # noqa: E731
+    edges = spark.range(n - 1).select(
+        perm(F.col("id")).alias("id_a"), perm(F.col("id") + 1).alias("id_b")
+    )
+    labels, rec = _cc_routed(spark, caplog, verts, edges)
+    assert rec["route"] == "local" and rec["edge_rows"] == n - 1
+    assert len(labels) == n and set(labels.values()) == {0}
+    # hooking halves a path per round: ~log2(n) rounds, not ~n
+    assert rec["hook_rounds"] <= 2 * math.ceil(math.log2(n))
+
+
+def test_cc_route_boundary(spark, caplog):
+    # a 40-edge long graph is 640 Arrow bytes: above a 300-byte budget it
+    # must take the star rounds, and give the labels the local finish gives
+    verts = spark.createDataFrame([(i,) for i in range(50)], "id long")
+    edf = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 50) for i in range(40)], "id_a long, id_b long"
+    )
+    local, rec = _cc_routed(spark, caplog, verts, edf)
+    assert rec["route"] == "local" and rec["estimate"] <= rec["cap"]
+    star, rec = _cc_routed(spark, caplog, verts, edf, threshold="300")
+    assert rec["route"] == "star" and rec["cap"] == 300 and rec["star_rounds"] >= 1
+    assert local == star
+
+
+def test_cc_local_route_job_pin(spark):
+    # the local finish is a checkpoint of the distinct edges plus one
+    # bounded collect: no per-round jobs
+    sc = spark.sparkContext
+    verts, edges = _path_graph(spark, 30)
+    connected_components_star(verts, edges)  # warm-up
+    sc.setJobGroup("cc_local_pin", "connected_components_star local route")
+    try:
+        connected_components_star(verts, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("cc_local_pin")) <= 4
 
 
 def test_cc_star_matches_propagation_on_random_graph(spark):
